@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan auditor: dumps `explain("formatted")` for every query (or a named
-  * subset) so pushdown / broadcast / codegen properties can be inspected —
-  * the "iterate until it's the plan you'd want" loop from the build brief.
+  * subset) so pushdown / broadcast / codegen properties can be inspected.
+  * A key whose dump Spark truncated fails, naming the env var to raise,
+  * and any failed key makes the run exit non-zero.
   *
   * Usage: runMain graft.Plans <sfDir> [queryName ...]
   */
@@ -32,13 +34,39 @@ object Plans {
         "spark.graft.hideCachedPlanTrees" ->
           sys.env.getOrElse("SPARK_GRAFT_HIDE_CACHED", "true")))
     spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    val failed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => wanted.isEmpty || wanted(n) }
-      .foreach { case (name, fn) =>
+      .flatMap { case (name, fn) =>
         println(s"\n===== $name =====")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"(failed: ${e.getMessage})") }
+        try { println(render(fn(spark, sfDir))); None }
+        catch {
+          case e: Throwable =>
+            println(s"(failed: ${e.getMessage})")
+            Some(name)
+        }
       }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"plan dump failed for: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Spark's mark on a plan string cut at `spark.sql.maxPlanStringLength`. */
+  private val TruncationMark =
+    """(\.\.\. \d+ more characters|Truncated plan of \d+ characters)$""".r
+
+  /** The formatted plan text of `df`; throws rather than hand back a dump
+    * Spark cut short, since a truncated plan reads like a complete one.
+    */
+  def render(df: DataFrame): String = {
+    val text = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    if (TruncationMark.findFirstIn(text).isDefined) {
+      throw new IllegalStateException("plan text truncated at " +
+        "spark.sql.maxPlanStringLength=" +
+        df.sparkSession.conf.get("spark.sql.maxPlanStringLength") +
+        "; raise SPARK_GRAFT_MAX_PLAN_STR for this dump")
+    }
+    text
   }
 }

@@ -85,4 +85,11 @@ final case class JobResponse(
 abstract class GenericEtl[S <: Settings](val settings: S) {
   /** The entire transformation lives here (`core.py:108-110`). */
   def runJob(spark: SparkSession): JobResponse
+
+  /** The jobs' shared failure contract: an exception in `body` becomes a
+    * 500 response carrying its message instead of escaping `runJob`.
+    */
+  protected def respond(body: => JobResponse): JobResponse =
+    try body
+    catch { case e: Exception => JobResponse(500, Some(e.toString), None) }
 }

@@ -27,7 +27,7 @@ class FormatConversionJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
   }
 
   override def runJob(spark: SparkSession): JobResponse =
-    try {
+    respond {
       val df = read(spark)
       val fmt = settings.extra.getOrElse("output_format", "parquet")
       var w = df.write.mode("overwrite").format(fmt)
@@ -42,8 +42,6 @@ class FormatConversionJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
       val n = spark.read.format(fmt).options(opts)
         .load(settings.outputDirectory).count()
       JobResponse(200, Some(s"wrote $n rows as $fmt"), Some(n.toString))
-    } catch {
-      case e: Exception => JobResponse(500, Some(e.toString), None)
     }
 }
 
@@ -62,7 +60,7 @@ class DedupJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
   import org.apache.spark.sql.functions._
 
   override def runJob(spark: SparkSession): JobResponse =
-    try {
+    respond {
       val textCol = settings.extra.getOrElse("text_column", "text")
       val idCol = settings.extra.getOrElse("id_column", "doc_id")
       val df = spark.read.parquet(settings.inputSource)
@@ -81,8 +79,6 @@ class DedupJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
       JobResponse(200,
         Some(s"kept $groups unique docs, removed $dups duplicates"),
         Some(s"""{"unique": $groups, "duplicates": $dups}"""))
-    } catch {
-      case e: Exception => JobResponse(500, Some(e.toString), None)
     }
 }
 
@@ -100,7 +96,7 @@ class QualityFilterJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
   import org.apache.spark.sql.functions._
 
   override def runJob(spark: SparkSession): JobResponse =
-    try {
+    respond {
       val textCol = settings.extra.getOrElse("text_column", "text")
       val idCol = settings.extra.getOrElse("id_column", "doc_id")
       val df = spark.read.parquet(settings.inputSource)
@@ -112,8 +108,6 @@ class QualityFilterJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
       JobResponse(200,
         Some(s"kept $kept of $total docs, rejected ${total - kept}"),
         Some(s"""{"kept": $kept, "rejected": ${total - kept}}"""))
-    } catch {
-      case e: Exception => JobResponse(500, Some(e.toString), None)
     }
 }
 
@@ -132,12 +126,12 @@ class ProfileJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
   import org.apache.spark.sql.functions.col
 
   override def runJob(spark: SparkSession): JobResponse =
-    try {
+    respond {
       val df = spark.read.parquet(settings.inputSource)
       import org.apache.spark.sql.types._
       val atomic: DataType => Boolean = {
         case _: NumericType | StringType | BooleanType | DateType |
-             TimestampType | BinaryType => true
+             TimestampType | TimestampNTZType | BinaryType => true
         case _ => false
       }
       val names = settings.extra.get("columns")
@@ -153,8 +147,6 @@ class ProfileJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
       JobResponse(200,
         Some(s"profiled $n columns over $rows rows"),
         Some(s"""{"columns": $n, "rows": $rows}"""))
-    } catch {
-      case e: Exception => JobResponse(500, Some(e.toString), None)
     }
 }
 
@@ -180,7 +172,7 @@ class CompactionJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
   }
 
   override def runJob(spark: SparkSession): JobResponse =
-    try {
+    respond {
       val target = settings.extra.get("target_file_bytes")
         .map(_.toLong).getOrElse(128L * 1024 * 1024)
       val (filesIn, bytesIn) = stats(spark, settings.inputSource)
@@ -197,8 +189,6 @@ class CompactionJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
           s"($bytesOut B), $n rows"),
         Some(s"""{"rows": $n, "files_in": $filesIn, """ +
           s""""files_out": $filesOut}"""))
-    } catch {
-      case e: Exception => JobResponse(500, Some(e.toString), None)
     }
 }
 
@@ -220,7 +210,7 @@ class SampleJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
   import org.apache.spark.sql.functions._
 
   override def runJob(spark: SparkSession): JobResponse =
-    try {
+    respond {
       val idCol = settings.extra.getOrElse("id_column", "doc_id")
       val wCol = settings.extra.getOrElse("weight_column", "n_chars")
       val k = settings.extra.getOrElse("sample_size", "100").toInt
@@ -236,8 +226,6 @@ class SampleJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
         Some(s"sampled ${row.getLong(0)} of $total rows by $wCol"),
         Some(s"""{"sampled": ${row.getLong(0)}, "total": $total,""" +
           s""" "weight_sum": ${row.getLong(1)}}"""))
-    } catch {
-      case e: Exception => JobResponse(500, Some(e.toString), None)
     }
 }
 
@@ -251,7 +239,7 @@ class SampleJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
   */
 class CdcApplyJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
   override def runJob(spark: SparkSession): JobResponse =
-    try {
+    respond {
       val changelog = settings.extra.getOrElse("changelog",
         settings.inputSource + "_changelog")
       val base = spark.read.parquet(settings.inputSource)
@@ -263,8 +251,6 @@ class CdcApplyJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
       JobResponse(200,
         Some(s"applied changelog onto $nBase base rows -> $n live rows"),
         Some(s"""{"base_rows": $nBase, "live_rows": $n}"""))
-    } catch {
-      case e: Exception => JobResponse(500, Some(e.toString), None)
     }
 }
 
@@ -282,7 +268,7 @@ class CompressionJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
   }
 
   override def runJob(spark: SparkSession): JobResponse =
-    try {
+    respond {
       val codec = settings.extra.getOrElse("compression", "zstd")
       val df = spark.read.parquet(settings.inputSource)
       df.write.mode("overwrite").option("compression", codec)
@@ -293,7 +279,5 @@ class CompressionJob(s: JobSettings) extends GenericEtl[JobSettings](s) {
       JobResponse(200,
         Some(s"recompressed $n rows with $codec: $before -> $after bytes"),
         Some(s"""{"rows": $n, "bytes_in": $before, "bytes_out": $after}"""))
-    } catch {
-      case e: Exception => JobResponse(500, Some(e.toString), None)
     }
 }

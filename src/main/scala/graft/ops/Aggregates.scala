@@ -19,24 +19,18 @@ object Aggregates {
   private val KmvK = 8
   private val KmvM = 1152921504606846976L
 
-  private val kmvCache = new graft.plans.DfLru(Dedup.MemoCap)
-
   /** Distinct (set_id, user_id, h) membership for the two KMV audiences,
     * memoized per (session, sf): BOTH sketch ops scan it twice (sketch
     * stats + the exact-intersection audit), so the distinct pass and the
     * md5 fold run once per session instead of four times.
     */
   private def kmvMembers(s: SparkSession, d: String): DataFrame =
-    kmvCache.getOrCompute((s, d), {
-      val uh = events(s, d)
+    graft.plans.ScopedMemo(s, s"agg_kmv_members#$d")(
+      events(s, d)
         .filter(col("event_type").isin("purchase", "click"))
         .select(col("event_type").as("set_id"), col("user_id")).distinct()
         .withColumn("h", expr("CAST(conv(substring(md5(" +
-          "CAST(user_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"))
-        .cache()
-      uh.count()
-      uh
-    })
+          "CAST(user_id AS STRING)), 1, 15), 16, 10) AS BIGINT)")))
 
   /** Per-set KMV stats `(set_id, n_exact, theta)`: θ is the K-th smallest
     * member hash, degrading to the full hash space M when the set is

@@ -44,36 +44,16 @@ object Dedup {
   val ContainmentThreshold = 0.8
   val HammingMax = 8 // dedup_simhash pair threshold (of 64 bits)
 
-  /** Memoized (sessionId, sf) -> cached shingle / band tables. Plan-keyed
-    * CacheManager matching already dedupes the *storage*, but every call
-    * still re-derives the logical plan, re-registers the native function,
-    * and re-runs analysis over the full sketch subtree — across the
-    * 7-query dedup family that re-analysis plus first-touch races cost
-    * ~10 s/bench. One DataFrame INSTANCE per (session, sf) makes reuse
-    * structural instead of coincidental (the `bloomSketchCache` contract:
-    * fixtures are immutable per sf dir, so entries never go stale).
-    */
-  /** Bounded + self-evicting (see [[graft.plans.DfLru]]): stopped-session
-    * keys purge on every access, and past [[MemoCap]] live entries the
-    * least-recently-used victim is unpersisted and dropped — a long
-    * session sweeping many sf dirs can no longer pin one InMemoryRelation
-    * per dir forever (ADVICE r6/r7 "shingle-cache eviction").
-    */
-  private[graft] val MemoCap = 8
-  private[graft] val shingleCache = new graft.plans.DfLru(MemoCap)
-  private[graft] val bandCache = new graft.plans.DfLru(MemoCap)
-  private[graft] val labelsCache = new graft.plans.DfLru(MemoCap)
-  private[graft] val simhashCache = new graft.plans.DfLru(MemoCap)
-
   /** doc_id -> distinct 3-word shingles (lower/trim normalized).
     *
-    * Cached: the same logical plan is traversed several times inside each
-    * dedup query AND across dedup_minhash / dedup_ngram_jaccard. Size is
-    * corpus-bounded (tokens × ~1 shingle/token), a few MB per 100k docs —
-    * the cache-per-pipeline-stage pattern a production dedup job would use.
+    * Memoized per (session, sf): the same table is traversed several
+    * times inside each dedup query AND across the dedup family, and one
+    * pinned instance makes that reuse structural instead of a plan-
+    * equality coincidence. Size is corpus-bounded (tokens × ~1
+    * shingle/token), a few MB per 100k docs.
     */
   private[graft] def shingled(s: SparkSession, d: String): DataFrame = {
-    graft.plans.ScopedMemo.compact(shingleCache.getOrCompute((s, d),
+    graft.plans.ScopedMemo(s, s"dedup_shingled#$d")(
       corpus(s, d)
         .withColumn("toks", split(lower(trim(col("text"))), " "))
         .withColumn("shingles",
@@ -82,8 +62,7 @@ object Dedup {
               """transform(sequence(0, size(toks) - 3),
                 |  i -> concat_ws(' ', slice(toks, i + 1, 3)))""".stripMargin)))
             .otherwise(array()))
-        .select("doc_id", "shingles")
-        .cache()))
+        .select("doc_id", "shingles"))
   }
 
   /** The exact-dedup pipeline (normalize -> sha256 fingerprint -> groupBy
@@ -121,12 +100,10 @@ object Dedup {
     // scans it twice, and every set-similarity dedup needs the identical
     // (doc_id, band, bh) table — one instance serves them all instead of
     // re-deriving + re-analyzing the 64-hash sketch plan per query.
-    val banded = graft.plans.ScopedMemo.compact(
-      bandCache.getOrCompute((s, d),
-        sh.filter(size(col("shingles")) > 0)
-          .select(col("doc_id"),
-            posexplode(expr("minhash_bands(shingles)")).as(Seq("band", "bh")))
-          .cache()))
+    val banded = graft.plans.ScopedMemo(s, s"dedup_banded#$d")(
+      sh.filter(size(col("shingles")) > 0)
+        .select(col("doc_id"),
+          posexplode(expr("minhash_bands(shingles)")).as(Seq("band", "bh"))))
 
     // LSH candidates: equal (band, band-hash), ordered pair, distinct
     val right = banded
@@ -251,13 +228,12 @@ object Dedup {
     * CPU cost of the whole simhash family, and THREE consumers each
     * rebuilt it (`dedup_simhash`, `dedup_method_overlap`,
     * `dedup_lsh_bucket_skew`). O(8 rows × N docs) of longs — cheap to
-    * pin; the bounded DfLru evicts + unpersists past its cap. Band
-    * extraction `(sig >> 8b) & 255` is mask-safe on the signed long
-    * (arithmetic-shift fill bits never survive the & 255), matching the
-    * DuckDB twin's logical shift on UBIGINT.
+    * pin. Band extraction `(sig >> 8b) & 255` is mask-safe on the signed
+    * long (arithmetic-shift fill bits never survive the & 255), matching
+    * the DuckDB twin's logical shift on UBIGINT.
     */
   private[graft] def simhashBanded(s: SparkSession, d: String): DataFrame =
-    graft.plans.ScopedMemo.compact(simhashCache.getOrCompute((s, d), {
+    graft.plans.ScopedMemo(s, s"dedup_simhash_banded#$d") {
       graft.functions.CharikarSimHash.register(s)
       // corpus(), not the raw table: the one-row-group fixture scans as a
       // single partition, serializing the 64-bit sketch on one core while
@@ -273,8 +249,7 @@ object Dedup {
               .stripMargin)).as("bk"))
         .select(col("doc_id"), col("sig"), col("bk.band").as("band"),
           col("bk.bh").as("bh"))
-        .cache()
-    }))
+    }
 
   private[graft] def simhashPairs(s: SparkSession, d: String): DataFrame = {
     val banded = simhashBanded(s, d)
@@ -360,7 +335,7 @@ object Dedup {
     // underneath is the single most expensive kernel in the dedup family
     // (~4 s/run at sf0.1) — without memoization each consumer pays it
     // again. The result is O(#labeled-docs), tiny to pin.
-    labelsCache.getOrCompute((s, d), {
+    graft.plans.ScopedMemo(s, s"dedup_cc_labels#$d") {
       // r13: minhashPairs is itself memoized + compacted now, so the
       // former per-build `pairs.cache()` + count would double-cache a
       // projection of an already-pinned IMR — both union branches read
@@ -370,12 +345,10 @@ object Dedup {
         .union(pairs.select(col("doc_b"), col("doc_a")))
         .toDF("src", "dst")
         .cache()
-      try {
-        val labels = connectedComponents(s, edges).cache()
-        labels.count() // materialize before the inputs unpersist
-        labels
-      } finally edges.unpersist()
-    })
+      // materialize before the transient edges unpersist
+      try graft.plans.ScopedMemo.materialize(connectedComponents(s, edges))
+      finally edges.unpersist()
+    }
   }
 
   private[graft] def connectedComponents(s: SparkSession,

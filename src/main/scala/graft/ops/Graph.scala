@@ -116,17 +116,16 @@ object Graph {
       .select(col("o_custkey").as("c"),
         (col("l_suppkey") + SuppOffset).as("sp"))
       .distinct()
-    // compact (r13): every graph key embeds this plan 2-5× per round —
-    // re-rooting consumers on the IMR leaf keeps their logical trees flat
-    graft.plans.ScopedMemo.compact(
+    // every graph key embeds this table 2-5× per round — the memo's
+    // compacted IMR leaf keeps their logical trees flat
+    graft.plans.ScopedMemo(s, s"graph_edges#$d")(
       pairs.select(col("c").as("src"), col("sp").as("dst"))
         .unionAll(pairs.select(col("sp").as("src"), col("c").as("dst")))
         // materialize PRE-PARTITIONED on src: every round joins the edges
         // on src, and InMemoryRelation preserves the partitioning, so the
         // 1.2M-edge side never re-exchanges — only the (tiny) rank side
         // moves per round. The classic iterative-graph layout.
-        .repartition(col("src"))
-        .cache())
+        .repartition(col("src")))
   }
 
   /** 2-round synchronous label propagation over the trade graph (modal
@@ -138,29 +137,23 @@ object Graph {
     * Memoized per (session, sf) like [[Dedup.connectedLabels]]: BOTH
     * consumers (and modularity's two endpoint joins) otherwise re-run the
     * full 2-round LPA — two edge-joins each — per subtree. The label
-    * table is O(V), tiny to pin; the bounded DfLru evicts + unpersists
-    * past its cap like the dedup memos.
+    * table is O(V), tiny to pin.
     */
-  private val lpaCache = new graft.plans.DfLru(Dedup.MemoCap)
-
   private[graft] def lpaLabels(s: SparkSession, d: String): DataFrame =
-    graft.plans.ScopedMemo.compact(
-      lpaCache.getOrCompute((s, d + "#st=" + stateModeTag(s)), {
+    graft.plans.ScopedMemo(s, s"graph_lpa_labels#$d#st=${stateModeTag(s)}") {
       val st = stateSide(s) _
       val e = edges(s, d)
       val l0 = e.select(col("src").as("node")).distinct()
         .withColumn("label", col("node"))
-      val lab = (1 to 2).foldLeft(l0) { (l, _) =>
+      (1 to 2).foldLeft(l0) { (l, _) =>
         e.join(st(l), col("src") === col("node"))
           .groupBy(col("dst"), col("label"))
           .agg(count(lit(1)).as("cnt"))
           .groupBy("dst")
           .agg(expr("min_by(label, struct(-cnt, label))").as("label"))
           .select(col("dst").as("node"), col("label"))
-      }.cache()
-      lab.count()
-      lab
-    }))
+      }
+    }
 
   /** The LSH-verified near-dup pair list `(doc_a < doc_b)`, projected to
     * the two id columns and memoized per (session, sf): FIVE graph
@@ -169,39 +162,30 @@ object Graph {
     * and each previously pinned its own `.cache()` copy per invocation —
     * five leaked duplicates of one tiny table in a long bench session.
     * `minhashPairs` itself rides the memoized shingle/band kernels, so
-    * this memo pins only the verified pair list; the bounded DfLru
-    * evicts + unpersists past its cap.
+    * this memo pins only the verified pair list.
     */
-  private val pairCache = new graft.plans.DfLru(Dedup.MemoCap)
-
   private[graft] def dupPairs(s: SparkSession, d: String): DataFrame =
-    graft.plans.ScopedMemo.compact(pairCache.getOrCompute((s, d), {
-      val p = Dedup.minhashPairs(s, d).select("doc_a", "doc_b").cache()
-      p.count()
-      p
-    }))
+    graft.plans.ScopedMemo(s, s"graph_dup_pairs#$d")(
+      Dedup.minhashPairs(s, d).select("doc_a", "doc_b"))
 
   /** (node, degree, n_nodes) — the second table every pagerank round
-    * touches, cached for the same reason as the edge list (each round
+    * touches, memoized for the same reason as the edge list (each round
     * would otherwise re-run the degree groupBy and the node count).
-    * Factored out so [[warm]] can build the IDENTICAL plan (Spark's
-    * CacheManager shares InMemoryRelations by plan equality).
     */
-  private[graft] def nodeTable(s: SparkSession, d: String): DataFrame = {
-    val deg = edges(s, d).groupBy("src").agg(count(lit(1)).as("deg"))
-    val n = deg.agg(count(lit(1)).as("n_nodes"))
-    graft.plans.ScopedMemo.compact(
-      deg.select(col("src").as("node"), col("deg"))
-        .crossJoin(broadcast(n)).cache())
-  }
+  private[graft] def nodeTable(s: SparkSession, d: String): DataFrame =
+    graft.plans.ScopedMemo(s, s"graph_node_table#$d") {
+      val deg = edges(s, d).groupBy("src").agg(count(lit(1)).as("deg"))
+      val n = deg.agg(count(lit(1)).as("n_nodes"))
+      deg.select(col("src").as("node"), col("deg")).crossJoin(broadcast(n))
+    }
 
   /** Bench warm-up (the [[Joins.ensureBucketed]] pattern): materialize the
-    * cached edge list and node table OUTSIDE the timed path, so a timed
+    * memoized edge list and node table OUTSIDE the timed path, so a timed
     * graph query measures its rounds, not the one-time graph build the
-    * caches exist to amortize (driver-observed 13.1 s cold vs 3.6 s warm
+    * memos exist to amortize (measured 13.1 s cold vs 3.6 s warm
     * for graph_pagerank at sf0.1).
     */
-  def warm(s: SparkSession, d: String): Unit = nodeTable(s, d).count()
+  def warm(s: SparkSession, d: String): Unit = nodeTable(s, d)
 
   /** Sampled betweenness centrality (Brandes, `nSeeds` seeds, 3-hop
     * horizon) — factored out of the registry entry so OperatorSpec can

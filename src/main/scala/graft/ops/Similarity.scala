@@ -93,15 +93,15 @@ object Similarity {
   private def vectors(s: SparkSession, d: String): DataFrame = {
     CosineSim.register(s)
     SimHashBands.register(s)
-    t(s, d, "embeddings")
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      // cached (the Graph.edges pattern): six sim/clustering queries and
-      // both sides of every self-join read this same projection —
-      // InMemoryRelation shares it by plan equality instead of re-casting
-      // the embedding column per subtree (~30 MB at sf0.1)
-      .cache()
+    // memoized (the Graph.edges pattern): six sim/clustering queries and
+    // both sides of every self-join read this same projection — one
+    // pinned instance instead of re-casting the embedding column per
+    // subtree (~30 MB at sf0.1)
+    graft.plans.ScopedMemo(s, s"sim_vectors#$d")(
+      t(s, d, "embeddings")
+        .repartition(s.sparkContext.defaultParallelism)
+        .select(col("vec_id"),
+          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")))
   }
 
   /** The rounded-decimal `(vec_id, label, xv)` projection shared by
@@ -171,21 +171,21 @@ object Similarity {
     * bit-identical centroid arrays. Every seed is its own nearest
     * centroid, so no cluster ever empties. Scale shape: one broadcast
     * assign + one (cluster, dim) sufficient-stat shuffle — K·dims rows
-    * move, vectors never do; the O(K) result is cached (plan-equality
-    * shared) because each sweep point re-reads it for probe AND assign.
+    * move, vectors never do; the O(K) result is memoized because each
+    * sweep point re-reads it for probe AND assign.
     */
   private def learnedCentroids(s: SparkSession, d: String): DataFrame =
-    ivfAssign(s, d)
-      .select(col("cluster"), posexplode(expr(
-        "transform(v, x -> CAST(round(x, 6) AS DECIMAL(12,6)))"))
-        .as(Seq("pos", "x")))
-      .groupBy("cluster", "pos")
-      .agg((sum(col("x")).cast("double") / count(lit(1))).as("m"))
-      .groupBy("cluster")
-      .agg(expr("transform(array_sort(collect_list(struct(pos, m))), " +
-        "p -> p.m)").as("cv"))
-      .select(col("cluster").as("c_id"), col("cv"))
-      .cache()
+    graft.plans.ScopedMemo(s, s"sim_learned_centroids#$d")(
+      ivfAssign(s, d)
+        .select(col("cluster"), posexplode(expr(
+          "transform(v, x -> CAST(round(x, 6) AS DECIMAL(12,6)))"))
+          .as(Seq("pos", "x")))
+        .groupBy("cluster", "pos")
+        .agg((sum(col("x")).cast("double") / count(lit(1))).as("m"))
+        .groupBy("cluster")
+        .agg(expr("transform(array_sort(collect_list(struct(pos, m))), " +
+          "p -> p.m)").as("cv"))
+        .select(col("cluster").as("c_id"), col("cv")))
 
   /** Product-quantization best-code table `(vec_id, sub, code, d2)`: each
     * vector split into 8 8-dim subvectors, each assigned to the nearest
@@ -194,18 +194,12 @@ object Similarity {
     * broadcasts; the only shuffle is the per-(vec, sub) argmin window.
     * Shared by `embedding_pq` (the encode pass) and
     * `embedding_pq_distortion` (the codebook-quality audit) — memoized
-    * per (session, sf) via the bounded DfLru so the encode (the
-    * 16-way distance sweep + per-(vec, sub) argmin window, the whole
-    * cost of both queries) runs once per session, not per consumer.
+    * per (session, sf) so the encode (the 16-way distance sweep +
+    * per-(vec, sub) argmin window, the whole cost of both queries) runs
+    * once per session, not per consumer.
     */
-  private val pqCache = new graft.plans.DfLru(Dedup.MemoCap)
-
   private def pqBest(s: SparkSession, d: String): DataFrame =
-    graft.plans.ScopedMemo.compact(pqCache.getOrCompute((s, d), {
-      val b = pqBestBuild(s, d).cache()
-      b.count()
-      b
-    }))
+    graft.plans.ScopedMemo(s, s"sim_pq_best#$d")(pqBestBuild(s, d))
 
   private def pqBestBuild(s: SparkSession, d: String): DataFrame = {
     val e = vectors(s, d)
@@ -392,7 +386,7 @@ object Similarity {
     * bounded-heap TopKPerKey operator. Returns (q_id, n_id, cos),
     * unranked.
     *
-    * Memoized per (session, sf) via the bounded DfLru: FOUR consumers
+    * Memoized per (session, sf): FOUR consumers
     * (`embedding_knn_graph`, `embedding_hubness`, `sim_graph_beam`,
     * `sim_graph_beam_recall`) each re-ran the full corpus-wide probe +
     * cluster search otherwise — the graph build is exactly the cost an
@@ -400,14 +394,8 @@ object Similarity {
     * should too. The memo is O(N·K) edges; budget family `knn_edges`
     * accounts for whichever consumer pays the build in bench order.
     */
-  private val knnCache = new graft.plans.DfLru(Dedup.MemoCap)
-
   private def knnEdges(s: SparkSession, d: String): DataFrame =
-    knnCache.getOrCompute((s, d), {
-      val g = knnEdgesBuild(s, d).cache()
-      g.count()
-      g
-    })
+    graft.plans.ScopedMemo(s, s"sim_knn_edges#$d")(knnEdgesBuild(s, d))
 
   private def knnEdgesBuild(s: SparkSession, d: String): DataFrame = {
     val e = vectors(s, d)
@@ -489,19 +477,13 @@ object Similarity {
     * `embedding_sign_lsh`'s collision census and
     * `sim_hamming_topk_eval`'s binary retrieval.
     */
-  private val signCache = new graft.plans.DfLru(Dedup.MemoCap)
-
   /** Memoized per (session, sf): the O(N·16·d) projection shuffle is the
     * whole cost of BOTH consumers (`embedding_sign_lsh`,
     * `sim_hamming_topk_eval`), each of which previously rebuilt it; the
-    * code table itself is O(N) longs — cheap to pin, DfLru-evicted.
+    * code table itself is O(N) longs — cheap to pin.
     */
   private def signCodes(s: SparkSession, d: String): DataFrame =
-    signCache.getOrCompute((s, d), {
-      val c = signCodesBuild(s, d).cache()
-      c.count()
-      c
-    })
+    graft.plans.ScopedMemo(s, s"sim_sign_codes#$d")(signCodesBuild(s, d))
 
   private def signCodesBuild(s: SparkSession, d: String): DataFrame = {
     val ex = t(s, d, "embeddings")
@@ -525,12 +507,12 @@ object Similarity {
   private[graft] def docVectors(s: SparkSession, d: String): DataFrame = {
     CosineSim.register(s)
     graft.functions.HashTfVec.register(s)
-    Dedup.shingled(s, d).filter(size(col("shingles")) > 0)
-      .select(col("doc_id"), expr("hash_tf_vec(shingles)").as("v"))
-      // cached: sim_pairs_lsh joins this table on BOTH pair sides, so
-      // uncached the 512-dim hashing-trick featurization runs twice per
-      // document per invocation
-      .cache()
+    // memoized: sim_pairs_lsh joins this table on BOTH pair sides, so
+    // unpinned the 512-dim hashing-trick featurization runs twice per
+    // document per invocation
+    graft.plans.ScopedMemo(s, s"sim_doc_vectors#$d")(
+      Dedup.shingled(s, d).filter(size(col("shingles")) > 0)
+        .select(col("doc_id"), expr("hash_tf_vec(shingles)").as("v")))
   }
 
   /** MinHash 16x4 band-join candidate pairs over the doc shingle sets —

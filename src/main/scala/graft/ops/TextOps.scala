@@ -33,19 +33,13 @@ object TextOps {
     * (`agg_countmin`, `text_hapax_stats`, `text_template_mining`,
     * `text_doc_perplexity`) each re-ran the full corpus explode + count
     * otherwise. The output is Zipf-small (vocabulary, not corpus), so the
-    * pin is O(vocab); the bounded DfLru evicts + unpersists past its cap.
+    * pin is O(vocab).
     */
-  private val wcCache = new graft.plans.DfLru(Dedup.MemoCap)
-
   def wordCounts(s: SparkSession, d: String): DataFrame =
-    graft.plans.ScopedMemo.compact(wcCache.getOrCompute((s, d), {
-      val wc = corpus(s, d)
+    graft.plans.ScopedMemo(s, s"text_word_counts#$d")(
+      corpus(s, d)
         .select(explode(split(lower(trim(col("text"))), " ")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
-        .cache()
-      wc.count()
-      wc
-    }))
+        .groupBy("word").agg(count(lit(1)).as("cnt")))
 
   /** Chunk width for `text_boilerplate`: 3 tokens — sized to the fixture's
     * ~31-word near-uniform vocabulary so repeated chunks actually occur

@@ -42,14 +42,13 @@ object TrainPrep {
 
   // corpus(), not a raw scan: the fixture file is one parquet row group,
   // and contamination's gram explode would otherwise run on a single core
-  // (the Tables.corpus pitfall). Cached (the Dedup.shingled pattern):
+  // (the Tables.corpus pitfall). Memoized (the Dedup.shingled pattern):
   // contamination evaluates this subtree on both the train and the eval
-  // branch, and pack_sequences shares the identical plan — one
+  // branch, and pack_sequences reads the same table — one
   // materialization serves all three.
   private def toks(s: SparkSession, d: String): DataFrame =
-    corpus(s, d)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
-      .cache()
+    graft.plans.ScopedMemo(s, s"trainprep_toks#$d")(
+      corpus(s, d).withColumn("toks", split(lower(trim(col("text"))), " ")))
 
   /** Distinct word n-grams per doc, as strings (the join key). */
   private def grams(df: DataFrame): DataFrame =

@@ -1,66 +1,54 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
-/** Bounded LRU memo for per-(session, sf-dir) cached DataFrames — closes
-  * ADVICE r6/r7's "weak/evicting shingle-cache keys" item.
+/** Byte-bounded LRU memo of `(session, key) -> pinned DataFrame` — the
+  * one LRU implementation behind [[ScopedMemo]].
   *
-  * The memo maps in [[graft.ops.Dedup]] hold strong refs to BOTH the
-  * SparkSession and a `.cache()`d DataFrame. Purging stopped-session keys
-  * (kept here) bounds the maps to live sessions, but a single long-lived
-  * session touching many sf dirs (sweep notebooks, multi-SF test suites)
-  * still accumulated one pinned InMemoryRelation per dir forever. This
-  * wrapper adds the missing half: access-ordered LRU with a small cap,
-  * and eviction UNPERSISTs the victim's storage before dropping the ref —
-  * consumers still holding the evicted frame stay correct (the plan
-  * simply recomputes), they just lose the memo.
+  * Each entry is charged its `InMemoryRelation`'s size as measured when
+  * it was inserted (after the builder materialized it; an unpinned frame
+  * costs 0). After every insert, least-recently-used entries are
+  * unpersisted and dropped until the total fits `budget(session)` — the
+  * entry just inserted is never the victim, so one oversized entry
+  * still memoizes, alone. Consumers still holding an evicted frame stay
+  * correct (the plan simply recomputes); they just lose the memo.
+  * Stopped-session keys are purged on every access, so a dead session
+  * can't stay pinned.
   *
   * Map access is synchronized on the underlying map, but compute bodies
-  * run OUTSIDE the lock (ADVICE r8: some bodies are eager cache()+count()
-  * jobs taking seconds — holding the monitor through one would block
-  * lookups for every unrelated key/session on the same cache). A per-key
-  * in-flight table gives single-flight semantics: concurrent callers of
-  * the SAME key wait on the first builder's future; callers of OTHER keys
-  * proceed immediately. If a builder fails, waiters retry the compute
+  * run OUTSIDE the lock (some bodies are eager cache()+count() jobs
+  * taking seconds — holding the monitor through one would block lookups
+  * for every unrelated key/session). A per-key in-flight table gives
+  * single-flight semantics: concurrent callers of the SAME key wait on
+  * the first builder's future; callers of OTHER keys proceed
+  * immediately. If a builder fails, waiters retry the compute
   * themselves — a failure never caches.
   */
-final class DfLru(maxEntries: Int) {
-  require(maxEntries >= 1)
+final class DfLru(budget: SparkSession => Long) {
+  import DfLru.Entry
 
-  private val m =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](
-      16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame])
-          : Boolean =
-        if (size() > maxEntries) {
-          if (!e.getKey._1.sparkContext.isStopped) {
-            try e.getValue.unpersist(false)
-            catch { case _: Throwable => () } // never fail the insert path
-          }
-          true
-        } else false
-    }
+  private val m = new java.util.LinkedHashMap[(SparkSession, String), Entry](
+    16, 0.75f, /* accessOrder = */ true)
 
   private val inFlight = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String),
     java.util.concurrent.CompletableFuture[DataFrame]]()
 
   /** Memoized lookup: returns the cached instance for `k`, computing (and
-    * LRU-inserting) it on first touch. Stopped-session keys are purged on
-    * every call, so dead sessions can't be pinned. Single-flight per key;
-    * the compute body never runs under the map monitor.
+    * LRU-inserting) it on first touch. Single-flight per key; the compute
+    * body never runs under the map monitor.
     */
   @annotation.tailrec
   def getOrCompute(k: (SparkSession, String), f: => DataFrame): DataFrame = {
     // registration is lazy (first lookup), NOT in the constructor: a
     // constructor-time register published `this` before the map/inFlight
     // fields were initialized, so a concurrent clearAll() racing class
-    // init could touch a half-constructed instance (ADVICE r9).
+    // init could touch a half-constructed instance
     DfLru.register(this)
     val fast = m.synchronized {
       m.keySet.removeIf(e => e._1.sparkContext.isStopped)
-      Option(m.get(k))
+      Option(m.get(k)).map(_.df)
     }
     fast match {
       case Some(v) => v
@@ -74,14 +62,14 @@ final class DfLru(maxEntries: Int) {
           catch { case _: java.util.concurrent.CompletionException => () }
           getOrCompute(k, f)
         } else {
-          // double-checked single-flight (ADVICE r9): a thread that missed
-          // the fast path BEFORE a previous builder finished can win
-          // putIfAbsent AFTER that builder's inFlight.remove — without this
-          // re-check it would rebuild the already-memoized key, and the
-          // overwritten entry's eagerly cache()d blocks would leak until
-          // session stop. On a hit, complete the future with the found
-          // value so late waiters observe it too.
-          val done = m.synchronized(Option(m.get(k)))
+          // double-checked single-flight: a thread that missed the fast
+          // path BEFORE a previous builder finished can win putIfAbsent
+          // AFTER that builder's inFlight.remove — without this re-check
+          // it would rebuild the already-memoized key, and the overwritten
+          // entry's eagerly cache()d blocks would leak until session stop.
+          // On a hit, complete the future with the found value so late
+          // waiters observe it too.
+          val done = m.synchronized(Option(m.get(k)).map(_.df))
           done match {
             case Some(v) =>
               mine.complete(v)
@@ -90,7 +78,7 @@ final class DfLru(maxEntries: Int) {
             case None =>
               try {
                 val v = f // OUTSIDE the map lock: may run eager Spark jobs
-                m.synchronized(m.put(k, v))
+                insert(k, Entry(v, DfLru.bytesOf(v)))
                 mine.complete(v)
                 v
               } catch {
@@ -101,8 +89,43 @@ final class DfLru(maxEntries: Int) {
     }
   }
 
-  /** Current entry count (test hook). */
+  private def insert(k: (SparkSession, String), e: Entry): Unit = {
+    val sc = k._1.sparkContext
+    // the budget is read before taking the monitor: it may ask the block
+    // manager master, and no Spark call runs under the map lock
+    val limit = if (sc.isStopped) Long.MaxValue else budget(k._1)
+    m.synchronized {
+      m.put(k, e)
+      var total = totalBytes
+      val it = m.entrySet.iterator() // eldest (least recently used) first
+      while (total > limit && it.hasNext) {
+        val victim = it.next()
+        if (victim.getKey != k) {
+          total -= victim.getValue.bytes
+          if (!victim.getKey._1.sparkContext.isStopped) {
+            try victim.getValue.df.unpersist(false)
+            catch { case _: Throwable => () } // never fail the insert path
+          }
+          it.remove()
+        }
+      }
+    }
+  }
+
+  private def totalBytes: Long = m.values.asScala.map(_.bytes).sum
+
+  /** Current entry count (test and telemetry hook). */
   def size: Int = m.synchronized(m.size())
+
+  /** Bytes charged to the live entries. */
+  def bytes: Long = m.synchronized(totalBytes)
+
+  /** Ids of the persisted RDDs holding the live entries' blocks. */
+  private[graft] def rddIds: Set[Int] = m.synchronized {
+    m.values.asScala.flatMap(e => DfLru.relation(e.df)).map(_.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded).map(_.cachedColumnBuffers.id)
+      .toSet
+  }
 
   /** Whether `k` is currently memoized (test hook). */
   def contains(k: (SparkSession, String)): Boolean =
@@ -115,6 +138,10 @@ final class DfLru(maxEntries: Int) {
 }
 
 object DfLru {
+  import org.apache.spark.sql.execution.columnar.InMemoryRelation
+
+  private final case class Entry(df: DataFrame, bytes: Long)
+
   private val instances =
     new java.util.concurrent.CopyOnWriteArrayList[DfLru]()
 
@@ -129,4 +156,18 @@ object DfLru {
     * memos must go with the blocks.
     */
   def clearAll(): Unit = instances.forEach(_.clear())
+
+  /** The CacheManager entry `df` reads, if it is pinned. */
+  private[graft] def relation(df: DataFrame): Option[InMemoryRelation] =
+    df.queryExecution.withCachedData match {
+      case imr: InMemoryRelation => Some(imr)
+      case _ => None
+    }
+
+  /** Stored bytes of `df`'s materialized InMemoryRelation; 0 when `df` is
+    * not pinned or not built yet.
+    */
+  private[graft] def bytesOf(df: DataFrame): Long =
+    relation(df).map(_.cacheBuilder.sizeInBytesStats.value.longValue)
+      .getOrElse(0L)
 }

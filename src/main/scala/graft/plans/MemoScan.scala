@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.columnar.CachedBatch
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
 import org.apache.spark.sql.execution.columnar.{InMemoryTableScanExec, InMemoryTableScanLike}
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Cached-scan wrapper that STOPS driver-side tree walks at the cache
@@ -37,7 +38,9 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * partitioning, ordering, columnar support and the
   * [[InMemoryTableScanLike]] surface (so AQE still wraps it in a
   * table-cache query stage and uses runtime cache statistics), but its
-  * `innerChildren` is empty — a tree walk prints one line and stops.
+  * `innerChildren` is empty — a tree walk prints one line and stops. Its
+  * SQL metrics are the wrapped scan's, so the UI and listeners still see
+  * the rows it reads.
   * Because the rule runs AFTER planning, column pruning and filter
   * pushdown into the cached scan are already in place and preserved
   * verbatim. Results are bit-identical by construction: the wrapped scan
@@ -60,6 +63,8 @@ case class MemoScanExec(scan: InMemoryTableScanExec)
   override def isMaterialized: Boolean = scan.isMaterialized
   override def baseCacheRDD(): RDD[CachedBatch] = scan.baseCacheRDD()
   override def runtimeStatistics: Statistics = scan.runtimeStatistics
+  // the wrapped scan's SQL metrics are this node's (resetMetrics follows)
+  override def metrics: Map[String, SQLMetric] = scan.metrics
   // the whole point: do NOT expose the cached plan to tree walks
   override def innerChildren: Seq[QueryPlan[_]] = Nil
   override def simpleString(maxFields: Int): String =

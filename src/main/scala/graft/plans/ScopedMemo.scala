@@ -2,112 +2,112 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Bounded home for per-invocation cached intermediates — the round-12
-  * sweep of the systemic `.cache()`-without-unpersist leak (VERDICT r11
-  * items 1-2).
+/** The one registry through which main code pins a DataFrame.
   *
-  * The pattern being retired: a query body pins an intermediate with a
-  * bare `.cache()` because its own plan reads it 2-4 times, and nobody
-  * ever unpersists it. Each invocation leaves one orphaned block set in
-  * the CacheManager for the life of the session; a 451-key bench session
-  * accumulates hundreds, and once the storage pool fills, LRU eviction
-  * thrash replaces them with multiplicative lineage recomputation — the
-  * exact failure the driver's r11 bench recorded (betweenness 48.9 s vs
-  * an 8 s clean budget, cache-kernel families inflated 3-6×).
+  * Every pinned intermediate — a cross-key kernel (shingles, graph edges,
+  * embedding vectors, word counts, CC labels …) or a query's own
+  * multiply-read subtree — is `ScopedMemo(s, "<kernel>#<sfDir>[#tags]")
+  * (plan)`. The registry caches and materializes the plan once per
+  * (session, key), hands back the same instance on later touches, and
+  * bounds what it holds by BYTES: each entry is charged its
+  * InMemoryRelation's materialized size, and past [[budget]] the
+  * least-recently-used entries are unpersisted and dropped (see
+  * [[DfLru]]). Consumers of an evicted frame stay correct — the plan
+  * recomputes — they just lose the memo.
   *
-  * The fix is the discipline the shared kernels already use: every
-  * formerly-bare cache routes through ONE bounded [[DfLru]], keyed
-  * `(session, "<op>#<sfDir>[#conf-tags]")`. Past [[Cap]] live entries the
-  * least-recently-used victim is unpersisted and dropped, so a whole-
-  * registry session holds at most [[Cap]] scoped block sets at any
-  * moment instead of one per invocation ever made. Consumers of an
-  * evicted frame stay correct — the plan recomputes — they just lose the
-  * memo, and since each bench/verify key is invoked once, eviction order
-  * across keys is free. Re-invocations of the SAME key (tests, verify +
-  * bench in one session) now also reuse one instance instead of pinning
-  * a fresh copy.
+  * Why bytes, not an entry count: a whole-registry session touches ~100
+  * keys in alphabetical order, and a count cap small enough to matter
+  * evicts long-lived kernels in the middle of the family that shares them
+  * (measured at a 16-entry cap: the dedup pair kernel was rebuilt
+  * mid-family, dedup_containment +0.8 s). Storage is the resource that
+  * actually runs out: a session whose pins fit the storage region never
+  * evicts (the whole test suite, over several sf dirs up to sf0.1, peaks
+  * at ~72 MB against a GB-scale budget), and a session sweeping many
+  * scale factors is bounded by what the block manager can protect.
   *
-  * The memo key must carry every session-conf knob the body reads (state
-  * mode, thresholds) — same contract as `Graph.lpaLabels`' "#st=" tag —
-  * or a conf flip would hand back the other mode's table.
+  * The key must carry every session-conf knob the body reads (state mode,
+  * thresholds) — `Graph.lpaLabels`' "#st=" tag — or a conf flip would
+  * hand back the other mode's table.
   */
 object ScopedMemo {
-  /** Max scoped intermediates pinned at once, across ALL modules. Sized
-    * to the widest single query (betweenness pins 5 layer/delta/contrib
-    * tables; the ANN sweep pins its shared legs) PLUS the r13 cross-key
-    * shared kernels (dedup pair stats / minhash pairs / blocked-tf) that
-    * must survive the ~15 alphabetically-interleaved dedup keys between
-    * their first and last consumer — at 16 the LRU evicted the shared
-    * pair kernel mid-family and late consumers silently recomputed it
-    * (measured: dedup_containment +0.8 s in the full suite vs isolated).
-    * Still far below the ~450 an unbounded bench session used to
-    * accumulate; the bench telemetry's storage_mb sawtooth peaks ~65 MB,
-    * so 32 sf0.1 intermediates fit storage with room to spare.
-    */
-  private[graft] val Cap = 32
+  private val cache = new DfLru(budget)
 
-  private val cache = new DfLru(Cap)
+  /** The storage region Spark itself protects from execution memory:
+    * the block managers' max storage memory times
+    * `spark.memory.storageFraction`.
+    */
+  private[graft] def budget(s: SparkSession): Long = {
+    val sc = s.sparkContext
+    val maxStorage = sc.getExecutorMemoryStatus.values.map(_._1).sum
+    (maxStorage * sc.getConf.getDouble("spark.memory.storageFraction", 0.5))
+      .toLong
+  }
 
   /** Memoized cache-and-materialize: first touch caches `body` and runs
     * the materializing count OUTSIDE the memo lock (DfLru single-flight);
     * later touches hand back the same pinned instance. Eager on purpose —
     * the kernels' `InMemoryRelation` must exist before the enclosing plan
-    * is walked, and lazy pins are what leaked.
+    * is walked, and lazy pins are what leaked. A body that already
+    * materialized its result (see [[materialize]]) is not counted again.
     *
-    * r13: the returned frame is [[compact]]ed — its logical plan is the
-    * `InMemoryRelation` LEAF, not the original lineage. Measured reason:
-    * memo-composing queries (betweenness layers, kcenter rounds, the ANN
-    * sweep legs) built logical trees tens of thousands of nodes deep, and
-    * every action re-paid analysis + cache-substitution + AQE
-    * plan-description stringification over that whole tree on the DRIVER
-    * main thread — a warm second invocation of betweennessSampled cost
-    * 3.8 s with every memo hit (guide §3.3/§7.3: very large plans make
-    * planning itself the bottleneck; truncate them). The LRU keeps the
-    * ORIGINAL frame, so eviction's unpersist still matches the
-    * CacheManager entry; consumers of the compact leaf stay correct
-    * either way (an IMR scan over dropped blocks rebuilds from its
-    * embedded physical plan).
+    * The returned frame is [[compact]]ed — its logical plan is the
+    * `InMemoryRelation` LEAF, not the original lineage. Memo-composing
+    * queries (betweenness layers, kcenter rounds, the ANN sweep legs)
+    * otherwise build logical trees tens of thousands of nodes deep, and
+    * every action re-pays analysis + cache-substitution + AQE
+    * plan-description stringification over that whole tree on the
+    * driver main thread (a warm second invocation of betweennessSampled
+    * cost 3.8 s with every memo hit). The registry keeps the ORIGINAL
+    * frame, so eviction's unpersist still matches the CacheManager entry.
     */
   def apply(s: SparkSession, key: String)(body: => DataFrame): DataFrame =
     compact(cache.getOrCompute((s, key), {
-      val df = body.cache()
-      // if the materializing count fails, the cache() registration must
-      // not outlive the failed compute: an entry that never reaches the
-      // LRU would be the unmanaged-pin pattern back through the error
-      // path (ADVICE r12), invisible to the leak census because failed
-      // keys abort the registry pass
-      try df.count()
-      catch { case t: Throwable => df.unpersist(blocking = false); throw t }
-      df
+      val df = body
+      if (df.storageLevel.useMemory) df else materialize(df)
     }))
+
+  /** Cache `df` and run its materializing count — for a registry body
+    * that must finish its pin before it releases a transient input
+    * (`Dedup.connectedLabels`). If the count fails, the cache
+    * registration must not outlive the failed compute: an entry that
+    * never reaches the registry would be an unmanaged pin.
+    */
+  private[graft] def materialize(df: DataFrame): DataFrame = {
+    df.cache()
+    try df.count()
+    catch { case t: Throwable => df.unpersist(blocking = false); throw t }
+    df
+  }
 
   /** Re-root `df` on its own InMemoryRelation: after `cache()` +
     * materialization, the analyzed-with-cache-substitution plan of the
     * memo frame is exactly the IMR leaf. Falls back to the original frame
-    * if substitution didn't take (cache raced away). Public for the
-    * DfLru kernel caches (shingled / banded / wordCounts / lpaLabels /
-    * pqBest …), whose consumers otherwise compose with the kernel's full
-    * lineage — same driver-side planning cost the memo compaction
-    * removes here. IMR stats survive (post-materialization, accurate),
-    * so downstream broadcast decisions are unchanged-or-better.
+    * if substitution didn't take (cache raced away). IMR stats survive
+    * (post-materialization, accurate), so downstream broadcast decisions
+    * are unchanged-or-better.
     *
-    * Post-eviction behavior (ADVICE r13 #2): if the LRU evicts the
-    * original frame (unpersist + CacheManager entry removed) while a
-    * consumer still holds the compacted leaf, re-executing that leaf
-    * rebuilds through the IMR's own CachedRDDBuilder, which re-persists
-    * the buffers with no CacheManager entry. That storage is untracked by
-    * the manager but BOUNDED — the builder memoizes its buffer RDD, so
-    * repeated actions reuse one block set, reclaimed by the
-    * ContextCleaner once the frame is unreferenced (MemoEvictionSpec pins
-    * the one-block-set bound).
+    * Post-eviction behavior: if the registry evicts the original frame
+    * (unpersist + CacheManager entry removed) while a consumer still
+    * holds the compacted leaf, re-executing that leaf rebuilds through
+    * the IMR's own CachedRDDBuilder, which re-persists the buffers with
+    * no CacheManager entry. That storage is untracked by the manager but
+    * BOUNDED — the builder memoizes its buffer RDD, so repeated actions
+    * reuse one block set, reclaimed by the ContextCleaner once the frame
+    * is unreferenced (MemoEvictionSpec pins the one-block-set bound).
     */
   private[graft] def compact(df: DataFrame): DataFrame =
-    df.queryExecution.withCachedData match {
-      case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+    DfLru.relation(df) match {
+      case Some(imr) =>
         org.apache.spark.sql.graftbridge.Bridge.ofRows(df.sparkSession, imr)
-      case _ => df
+      case None => df
     }
 
   /** Live entry count (leak-tripwire spec hook). */
   def size: Int = cache.size
+
+  /** Bytes charged to the live entries (leak-tripwire spec hook). */
+  private[graft] def bytes: Long = cache.bytes
+
+  /** Persisted RDDs the registry owns (leak-tripwire spec hook). */
+  private[graft] def rddIds: Set[Int] = cache.rddIds
 }

@@ -170,8 +170,8 @@ class BenchSpec extends SparkSpec {
       "member pays the memoized build, and a planted kernel regression " +
       "trips the family gate no matter which member carries it " +
       "(VERDICT r8 #4)") {
-    // The bench runs keys alphabetically, and a DfLru-memoized kernel is
-    // paid by whichever family member runs FIRST — so per-key budgets
+    // The bench runs keys alphabetically, and a kernel memoized in the
+    // ScopedMemo registry is paid by whichever family member runs FIRST — so per-key budgets
     // would encode bench order (r8 observed exactly this: dedup_connected
     // 0.096→0.164s when the cc_labels kernel accounting moved). The
     // family gate sums the members, which makes it order-independent.

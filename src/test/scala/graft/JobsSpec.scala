@@ -68,6 +68,27 @@ class JobsSpec extends SparkSpec {
     assert(cols == expected)
   }
 
+  test("ProfileJob's default columns include TIMESTAMP_NTZ columns") {
+    // parquet timestamps written without UTC adjustment (the fixtures'
+    // timestamp[us] columns, e.g. orders.o_orderdate) scan as
+    // TIMESTAMP_NTZ; the default atomic filter must not skip them
+    spark.sql("SELECT id, make_timestamp_ntz(2020, 1, CAST(id AS INT) + 1, " +
+        "0, 0, 0) AS ts FROM range(5)")
+      .write.mode("overwrite").parquet(s"$out/ntz_in")
+    val in = spark.read.parquet(s"$out/ntz_in")
+    assert(in.schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType, in.schema)
+    val r = new ProfileJob(JobSettings(
+      s"$out/ntz_in", s"$out/ntz_profile")).runJob(spark)
+    assert(r.statusCode == 200, r)
+    val prof = spark.read.parquet(s"$out/ntz_profile").collect()
+      .map(row => row.getString(0) -> row).toMap
+    assert(prof.keySet == Set("id", "ts"))
+    assert(prof("ts").getAs[Long]("ndv") == 5L)
+    assert(prof("ts").getAs[String]("min_v") == "2020-01-01 00:00:00")
+    assert(prof("ts").getAs[String]("max_v") == "2020-01-05 00:00:00")
+  }
+
   test("DedupJob removes exact duplicates under the job contract") {
     import org.apache.spark.sql.functions._
     // the fixture corpus has no EXACT duplicates (its planted pairs are

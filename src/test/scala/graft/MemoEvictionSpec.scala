@@ -5,9 +5,9 @@ import graft.plans.DfLru
 
 /** ADVICE r6/r7 closures with teeth:
   *
-  *  - DfLru: the per-(session, sf) memo maps must EVICT (and unpersist)
-  *    past their cap instead of pinning one InMemoryRelation per sf dir
-  *    for the life of the session ("shingle-cache eviction").
+  *  - DfLru: the memo registry must EVICT (and unpersist) past its byte
+  *    budget instead of pinning one InMemoryRelation per sf dir for the
+  *    life of the session ("shingle-cache eviction").
   *  - prioritySample: the weight path must stay double end-to-end so an
   *    extreme BIGINT weight can neither overflow (the BIGINT-product
   *    failure at w >= 2^31 the old form risked) nor produce a NULL/NaN
@@ -15,23 +15,31 @@ import graft.plans.DfLru
   */
 class MemoEvictionSpec extends SparkSpec {
 
-  test("DfLru evicts LRU past the cap and unpersists the victim") {
-    val lru = new DfLru(2)
+  test("DfLru evicts LRU past its byte budget and unpersists the victim") {
+    // the budget is sized from the first entry's measured bytes: room for
+    // two equal-shaped entries, not three
+    var budget = Long.MaxValue
+    val lru = new DfLru(_ => budget)
     def mk(tag: Int) = {
       val df = spark.range(tag, tag + 10L).toDF("id").cache()
       df.count()
       df
     }
     val a = lru.getOrCompute((spark, "a"), mk(0))
-    lru.getOrCompute((spark, "b"), mk(100))
+    val one = DfLru.bytesOf(a)
+    assert(one > 0, "an entry is charged its materialized bytes")
+    budget = one * 5 / 2
+    val b = lru.getOrCompute((spark, "b"), mk(100))
     assert(lru.size == 2)
     // touch a so b becomes the LRU victim
     lru.getOrCompute((spark, "a"), fail("a must be memoized"))
     lru.getOrCompute((spark, "c"), mk(200))
     assert(lru.size == 2)
+    assert(lru.bytes <= budget, s"${lru.bytes} bytes over a $budget budget")
     assert(lru.contains((spark, "a")) && lru.contains((spark, "c")))
     assert(!lru.contains((spark, "b")), "LRU victim must drop")
     // the victim's storage was released; the survivor's was not
+    assert(!b.storageLevel.useMemory, "victim is unpersisted")
     assert(a.storageLevel.useMemory, "survivor stays cached")
     // evicted frames still COMPUTE correctly (they just lost the memo)
     assert(mk(100).count() == 10L)
@@ -76,7 +84,8 @@ class MemoEvictionSpec extends SparkSpec {
     // ContextCleaner once the frame is unreferenced). This pins both
     // halves: rows stay correct after eviction, and the census grows by
     // at most one entry across repeated re-executions.
-    val lru = new DfLru(1)
+    // a 1-byte budget holds only the newest entry
+    val lru = new DfLru(_ => 1L)
     def build(lo: Long) = {
       val df = spark.range(lo, lo + 20L).toDF("id")
         .withColumn("v", col("id") * 3).cache()
@@ -86,7 +95,7 @@ class MemoEvictionSpec extends SparkSpec {
     val compacted = ScopedMemo.compact(lru.getOrCompute((spark, "ek1"), build(0)))
     assert(compacted.queryExecution.analyzed.isInstanceOf[
       org.apache.spark.sql.execution.columnar.InMemoryRelation])
-    // force eviction of ek1 (cap 1): its blocks are unpersisted
+    // force eviction of ek1: its blocks are unpersisted
     lru.getOrCompute((spark, "ek2"), build(100))
     assert(!lru.contains((spark, "ek1")), "ek1 must be the LRU victim")
     val censusBefore = spark.sparkContext.getPersistentRDDs.size
@@ -102,7 +111,7 @@ class MemoEvictionSpec extends SparkSpec {
   }
 
   test("DfLru getOrCompute purges stopped-session keys") {
-    val lru = new DfLru(4)
+    val lru = new DfLru(_ => Long.MaxValue)
     val dead = spark.newSession()
     // a key whose session "stops": simulate via an sc-stopped check — the
     // shared test SparkContext must NOT be stopped, so instead pin the
@@ -145,10 +154,9 @@ class MemoEvictionSpec extends SparkSpec {
       "behind (VERDICT r11 #1: four bare .cache() calls per invocation)") {
     val sc = spark.sparkContext
     // first invocation may add managed memo entries (ScopedMemo layers +
-    // the shared edge/node kernels) — those are bounded by the LRU cap
+    // the shared edge/node kernels) — those are bounded by the byte budget
     SparkEntry.queries("graph_betweenness_sampled")(spark, sf).count()
-    assert(graft.plans.ScopedMemo.size <= graft.plans.ScopedMemo.Cap,
-      s"ScopedMemo overflowed its cap: ${graft.plans.ScopedMemo.size}")
+    assertRegistryWithinBudget()
     val afterFirst = sc.getPersistentRDDs.keySet.toSet
     // the leak signature was one fresh orphaned block set PER INVOCATION:
     // a second run must hit the memos and pin NOTHING new
@@ -175,14 +183,14 @@ class MemoEvictionSpec extends SparkSpec {
     // slow cleaner the old 40x250ms budget false-failed. The loop exits
     // when the census is under the bound OR no entry has been freed for
     // `stallMs` (the cleaner is genuinely done, not merely slow).
-    def drained(bound: Int): Int = {
+    def drained(census: () => Int, bound: Int): Int = {
       val stallMs = 30000L
-      var last = sc.getPersistentRDDs.size
+      var last = census()
       var lastProgress = System.nanoTime()
       while (last > bound &&
           (System.nanoTime() - lastProgress) < stallMs * 1000000L) {
         System.gc(); Thread.sleep(200)
-        val cur = sc.getPersistentRDDs.size
+        val cur = census()
         if (cur < last) { last = cur; lastProgress = System.nanoTime() }
       }
       last
@@ -194,30 +202,47 @@ class MemoEvictionSpec extends SparkSpec {
     // few fixed GC cycles (bound 0 is unreachable while kernels are
     // legitimately pinned; 6 cycles empties the transient checkpoints).
     (1 to 6).foreach { _ => System.gc(); Thread.sleep(250) }
-    val before = sc.getPersistentRDDs.size
+    // the registry's own pins are bounded by its byte budget (asserted
+    // below); the census tripwire counts only what it does NOT own
+    def unowned: Int =
+      (sc.getPersistentRDDs.keySet.toSet -- graft.plans.ScopedMemo.rddIds).size
+    val before = unowned
     val (_, failed) = Bench.runQueries(spark, sf, SparkEntry.queries)
     assert(failed.isEmpty, s"failed: $failed")
-    val n = drained(before + CensusDeltaBound)
+    assertRegistryWithinBudget()
+    val n = drained(() => unowned, before + CensusDeltaBound)
+    info(s"unowned persisted RDDs $before -> $n; registry " +
+      s"${graft.plans.ScopedMemo.size} entries, " +
+      s"${graft.plans.ScopedMemo.bytes} bytes")
     assert(n - before <= CensusDeltaBound,
-      s"a full-registry pass grew the persisted-RDD census $before -> $n " +
-        s"(delta bound $CensusDeltaBound) — a per-invocation cache leak " +
-        "is back; route the new pin through graft.plans.ScopedMemo or a " +
-        "Generations rotation")
-    assert(graft.plans.ScopedMemo.size <= graft.plans.ScopedMemo.Cap)
+      s"a full-registry pass grew the persisted RDDs outside the memo " +
+        s"registry $before -> $n (delta bound $CensusDeltaBound) — a " +
+        "per-invocation cache leak is back; route the new pin through " +
+        "graft.plans.ScopedMemo or a Generations rotation")
   }
 
-  /** Registry-pass growth ceiling — DERIVATION (keep in sync with the
-    * census test above and SURVEY.md §7.5o): one full pass may
-    * first-touch the shared kernels for its sf dir (Tables corpus, Graph
-    * edges/nodes, Dedup shingle/band/labels/simhash, Similarity
-    * vectors/pq/knn/sign, TextOps wordCounts, Aggregates kmv,
-    * bucketed/zoned warm-ups — ~30 block sets, counted from the kernel
-    * registry at the r12 sweep) plus up to the ScopedMemo LRU cap
-    * (30 + 32 ≈ 62 legitimate since the r13 cap raise), rounded up for
-    * Spark-internal persists. The number this must stay BELOW is the
-    * leak signature it guards against: ≈ +1 per formerly-bare-cache key
-    * (+25 on top of the kernels+cap, i.e. ~87+) — so the bound has real
-    * headroom on the pass side and real teeth on the leak side.
+  private def assertRegistryWithinBudget(): Unit = {
+    import graft.plans.ScopedMemo
+    val budget = ScopedMemo.budget(spark)
+    assert(ScopedMemo.bytes <= budget,
+      s"the memo registry holds ${ScopedMemo.bytes} bytes in " +
+        s"${ScopedMemo.size} entries, over its $budget-byte budget")
+  }
+
+  /** Growth ceiling for persisted RDDs the memo registry does not own —
+    * DERIVATION (keep in sync with the census test above and SURVEY.md
+    * §7.5o): every shared kernel (Tables corpus, Graph edges/nodes,
+    * Dedup shingle/band/labels/simhash, Similarity vectors/pq/knn/sign,
+    * TextOps wordCounts, Aggregates kmv, TrainPrep toks) and every
+    * per-query multiply-read subtree now lives in the registry, whose
+    * pins are excluded here and bounded by bytes instead. What remains
+    * legitimately outside it is transient: localCheckpoint generations
+    * the ContextCleaner has not freed yet, and one re-persisted block set
+    * per evicted compacted frame still being read (measured: +1 over a
+    * pass at sf0.001, with 72 registry entries holding 11.8 MB). The leak
+    * signature this guards against is ≈ +1 per formerly-bare-cache key
+    * (~25 at the r12 sweep), so a bound of 10 keeps real teeth on the
+    * leak side.
     */
-  private val CensusDeltaBound = 30 + graft.plans.ScopedMemo.Cap + 14
+  private val CensusDeltaBound = 10
 }

@@ -852,6 +852,37 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("MemoScan forwards the cached scan's SQL metrics: numOutputRows " +
+      "counts the rows the memo-backed query read") {
+    withSQLConf("spark.sql.adaptive.enabled" -> "true",
+        "spark.graft.hideCachedPlanTrees" -> "true") {
+      val memo = graft.plans.ScopedMemo(spark,
+          s"memo_scan_metrics_spec#${System.identityHashCode(this)}")(
+        spark.range(0, 100L, 1, 4).toDF("id").withColumn("v", col("id") * 2))
+      val q = memo.agg(sum(col("v")))
+      // collect(), not head(): head plans a new LIMIT query, so the
+      // executed plan inspected below would never have run
+      assert(q.collect().head.getLong(0) == (0L until 100L).map(_ * 2).sum)
+      val scans = org.apache.spark.sql.graftbridge.Bridge
+        .deepNodes(q.queryExecution.executedPlan)
+        .collect { case m: graft.plans.MemoScanExec => m }
+      assert(scans.nonEmpty, q.queryExecution.executedPlan.toString)
+      assert(scans.map(_.metrics.get("numOutputRows").map(_.value)) ==
+        Seq(Some(100L)), "MemoScan must report the rows its scan read")
+    }
+  }
+
+  test("graft.Plans refuses a truncated plan dump and names the env var " +
+      "that raises the limit") {
+    val df = spark.range(10).toDF("id").filter(col("id") > 3)
+      .groupBy(expr("id % 3").as("g")).count()
+    assert(Plans.render(df).contains("HashAggregate"))
+    withSQLConf("spark.sql.maxPlanStringLength" -> "200") {
+      val e = intercept[IllegalStateException](Plans.render(df))
+      assert(e.getMessage.contains("SPARK_GRAFT_MAX_PLAN_STR"), e.getMessage)
+    }
+  }
+
   private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
     val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
