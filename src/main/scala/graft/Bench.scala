@@ -3,6 +3,9 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE SHORT machine-readable JSON line as the LAST stdout line.
   *
@@ -36,15 +39,40 @@ object Bench {
     *    signature, a sawtooth is healthy memo eviction;
     *  - `load1`: /proc/loadavg 1-min average — >> #cores means something
     *    outside this JVM (or a stuck fork storm inside it) stole cores
-    *    even when the foreign-JVM tripwire saw nothing at launch time.
+    *    even when the foreign-JVM tripwire saw nothing at launch time;
+    *  - `codegenCompiles` / `codegenMs`: generated classes compiled inside
+    *    the timed window (`CodegenMetrics.METRIC_COMPILATION_TIME` count)
+    *    and the time spent compiling them (`CodeGenerator.compileTime`:
+    *    exact, unlike the histogram, whose reservoir keeps 1028 samples).
+    *    A warm key that still compiles is recompiling what the codegen
+    *    cache evicted; with no evictions, their sum over a run is the
+    *    registry's class census.
     */
   final case class KeyStat(name: String, sec: Double, gcMs: Long,
-      storageMb: Double, cachedRdds: Int, load1: Double)
+      storageMb: Double, cachedRdds: Int, load1: Double,
+      codegenCompiles: Long, codegenMs: Double)
 
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+  }
+
+  /** (classes compiled, nanoseconds spent compiling) since JVM start. */
+  private def compileStats(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** Used heap and Metaspace in MB after a `System.gc()`: what the run's
+    * live state, the codegen cache's classes among it, costs.
+    */
+  private def retainedMb(): (Double, Double) = {
+    import scala.jdk.CollectionConverters._
+    import java.lang.management.ManagementFactory
+    System.gc()
+    val metaspace = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum
+    (ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0,
+      metaspace / 1048576.0)
   }
 
   private def loadAvg1(): Double =
@@ -86,6 +114,7 @@ object Bench {
       // reading as 15s after a 2M-row distinct)
       System.gc()
       val gc0 = gcMillis()
+      val (n0, ns0) = compileStats()
       val t0 = System.nanoTime()
       try fn(spark, sfDir).count()
       catch {
@@ -96,12 +125,14 @@ object Bench {
       }
       val sec = (System.nanoTime() - t0) / 1e9
       val gcMs = gcMillis() - gc0
+      val (n1, ns1) = compileStats()
       val sc = spark.sparkContext
       val storageMb =
         sc.getRDDStorageInfo.map(_.memSize).sum / (1024.0 * 1024.0)
       val cached = sc.getPersistentRDDs.size
       System.err.println(f"[bench] $name%-24s $sec%8.2fs")
-      KeyStat(name, sec, gcMs, storageMb, cached, loadAvg1())
+      KeyStat(name, sec, gcMs, storageMb, cached, loadAvg1(), n1 - n0,
+        (ns1 - ns0) / 1e6)
     }
     (results, failed)
   }
@@ -180,21 +211,30 @@ object Bench {
     // per-key telemetry rides ONLY the detail file (the stdout summary
     // stays small + stable for the driver's parser): after a run whose
     // total looks inflated, read gc_ms (heap-pressure victim), the
-    // storage_mb ramp (cache leak vs healthy memo sawtooth), and load1
+    // storage_mb ramp (cache leak vs healthy memo sawtooth), load1
     // (cores stolen mid-run that the launch-time foreign-JVM tripwire
-    // could not see)
+    // could not see), and codegen_compiles/codegen_ms (a warm key that
+    // compiles is refilling an undersized codegen cache)
     val telemetry = stats.map { st =>
       "\"" + st.name + "\":{\"gc_ms\":" + st.gcMs +
         ",\"storage_mb\":" + num(st.storageMb) +
         ",\"cached_rdds\":" + st.cachedRdds +
-        ",\"load1\":" + num(st.load1) + "}"
+        ",\"load1\":" + num(st.load1) +
+        ",\"codegen_compiles\":" + st.codegenCompiles +
+        ",\"codegen_ms\":" + num(st.codegenMs) + "}"
     }.mkString("{", ",", "}")
+    val (heapMb, metaspaceMb) = retainedMb()
     Files.createDirectories(Paths.get("/root/repo/target"))
     val detailJson =
       (s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$full,""" +
         s""""failed":$failedJson,"foreign_jvms":${foreign.size},""" +
         s""""cpus":${Sessions.envCores},""" +
         s""""telemetry":$telemetry,""" +
+        s""""codegen_compiles":${stats.map(_.codegenCompiles).sum},""" +
+        s""""codegen_ms":${num(stats.map(_.codegenMs).sum)},""" +
+        s""""codegen_compiles_jvm":${compileStats()._1},""" +
+        s""""heap_mb_after_gc":${num(heapMb)},""" +
+        s""""metaspace_mb_after_gc":${num(metaspaceMb)},""" +
         s""""sf":"$sfDir"}""").getBytes(StandardCharsets.UTF_8)
     Files.write(Paths.get(s"/root/repo/$detail"), detailJson)
     // r14 (VERDICT r13 #8): the driver benches at TWO core counts, and a

@@ -55,7 +55,7 @@ object JobSettings {
     require(node.get("output_directory").isTextual,
       "output_directory must be a string path")
     val known = Set("input_source", "output_directory")
-    val extra = node.fields().asScala.collect {
+    val extra = node.properties().asScala.collect {
       case e if !known(e.getKey) =>
         require(e.getValue.isValueNode,
           s"setting '${e.getKey}' must be a scalar, got ${e.getValue.getNodeType}")
